@@ -1763,63 +1763,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # 50-query window always re-hashes RED / never-hashed / least-recently-
     # hashed queries first.  tests/test_rotation.py pins the invariant;
     # run `python tools/rotate_registry.py` to regenerate after adding a
-    # query.  r13 window: the r12 sweep hashed the r12 window (the five
-    # r12 additions + the stale-r09 cohort), so the window advances to the
-    # r10-hashed cohort (quantile_agg .. q16_supplier_counts and the rest
-    # of the r10 set); r11/r12-hashed entries ride at the tail.
+    # query.  The r13 sweep hashed the r10-hashed cohort, so the window
+    # advances to the r11-hashed cohort plus the first four r12-hashed
+    # entries; r13-hashed entries ride at the tail.
     return {
-        # --- last hashed: green r10 ---
-        "quantile_agg": q_quantile_agg,
-        "top_p": q_top_p,
-        "text_tokenize": q_text_tokenize,
-        "range_join": q_range_join,
-        "ann_ivf": q_ann_ivf,
-        "ann_ivf_refined": q_ann_ivf_refined,
-        "bucketed_join": q_bucketed_join,
-        "seq_pack": q_seq_pack,
-        "mixture": q_mixture,
-        "pivot": q_pivot,
-        "semi_anti": q_semi_anti,
-        "sample_split": q_sample_split,
-        "stratified_sample": q_stratified_sample,
-        "dedup_clusters": q_dedup_clusters,
-        "quality_filter": q_quality_filter,
-        "ngram_topk": q_ngram_topk,
-        "tfidf": q_tfidf,
-        "bm25": q_bm25,
-        "embed_quant": q_embed_quant,
-        "q10_returned_items": q10_returned_items,
-        "q4_priority_returns": q4_priority_returns,
-        "q14_promo_revenue": q14_promo_revenue,
-        "q19_brand_quantity": q19_brand_quantity,
-        "q6_forecast": q6_forecast_revenue,
-        "q7_volume_shipping": q7_volume_shipping,
-        "q8_market_share": q8_market_share,
-        "q9_product_profit": q9_product_profit,
-        "q13_custdist": q13_customer_distribution,
-        "q15_top_supplier": q15_top_supplier,
-        "q17_small_quantity": q17_small_quantity,
-        "q18_large_orders": q18_large_orders,
-        "q22_sales_opportunity": q22_global_sales_opportunity,
-        "q2_min_supplier": q2_min_acctbal_supplier,
-        "q11_important_parts": q11_important_parts,
-        "q12_shipping_delay": q12_shipping_delay,
-        "q16_supplier_counts": q16_supplier_counts,
-        "sticky_split": q_sticky_split,
-        "numeric_profile": q_numeric_profile,
-        "incr_clusters": q_incr_clusters,
-        "q20_promotion_suppliers": q20_promotion_suppliers,
-        "q21_waiting_suppliers": q21_waiting_suppliers,
-        "jaccard_pairs": q_jaccard_pairs,
-        "doc_repetition": q_doc_repetition,
-        "funnel": q_funnel,
-        "retention": q_retention,
-        "domain_cap": q_domain_cap,
         # --- last hashed: green r11 ---
-        "bpe_histogram": q_bpe_histogram,
-        "top_p_frac": q_top_p_frac,
-        "cluster_rep": q_cluster_rep,
-        "anomaly": q_anomaly,
         "unpivot": q_unpivot,
         "incr_gold": q_incr_gold,
         "sketch_rollup": q_sketch_rollup,
@@ -1917,6 +1865,57 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_topk": q_bm25_topk,
         "contamination": q_contamination,
         "event_dedup": q_event_dedup,
+        # --- last hashed: green r13 ---
+        "quantile_agg": q_quantile_agg,
+        "top_p": q_top_p,
+        "text_tokenize": q_text_tokenize,
+        "range_join": q_range_join,
+        "ann_ivf": q_ann_ivf,
+        "ann_ivf_refined": q_ann_ivf_refined,
+        "bucketed_join": q_bucketed_join,
+        "seq_pack": q_seq_pack,
+        "mixture": q_mixture,
+        "pivot": q_pivot,
+        "semi_anti": q_semi_anti,
+        "sample_split": q_sample_split,
+        "stratified_sample": q_stratified_sample,
+        "dedup_clusters": q_dedup_clusters,
+        "quality_filter": q_quality_filter,
+        "ngram_topk": q_ngram_topk,
+        "tfidf": q_tfidf,
+        "bm25": q_bm25,
+        "embed_quant": q_embed_quant,
+        "q10_returned_items": q10_returned_items,
+        "q4_priority_returns": q4_priority_returns,
+        "q14_promo_revenue": q14_promo_revenue,
+        "q19_brand_quantity": q19_brand_quantity,
+        "q6_forecast": q6_forecast_revenue,
+        "q7_volume_shipping": q7_volume_shipping,
+        "q8_market_share": q8_market_share,
+        "q9_product_profit": q9_product_profit,
+        "q13_custdist": q13_customer_distribution,
+        "q15_top_supplier": q15_top_supplier,
+        "q17_small_quantity": q17_small_quantity,
+        "q18_large_orders": q18_large_orders,
+        "q22_sales_opportunity": q22_global_sales_opportunity,
+        "q2_min_supplier": q2_min_acctbal_supplier,
+        "q11_important_parts": q11_important_parts,
+        "q12_shipping_delay": q12_shipping_delay,
+        "q16_supplier_counts": q16_supplier_counts,
+        "sticky_split": q_sticky_split,
+        "numeric_profile": q_numeric_profile,
+        "incr_clusters": q_incr_clusters,
+        "q20_promotion_suppliers": q20_promotion_suppliers,
+        "q21_waiting_suppliers": q21_waiting_suppliers,
+        "jaccard_pairs": q_jaccard_pairs,
+        "doc_repetition": q_doc_repetition,
+        "funnel": q_funnel,
+        "retention": q_retention,
+        "domain_cap": q_domain_cap,
+        "bpe_histogram": q_bpe_histogram,
+        "top_p_frac": q_top_p_frac,
+        "cluster_rep": q_cluster_rep,
+        "anomaly": q_anomaly,
     }
 
 

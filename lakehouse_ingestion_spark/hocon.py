@@ -42,6 +42,32 @@ def flatten_keys(obj: dict, prefix: str = "") -> dict:
     return out
 
 
+def unflatten_keys(obj: dict, keys, depth: int = 1) -> dict:
+    """Inverse of ``flatten_keys`` for the mapping-valued ``keys``: fold
+    ``<key>.<rest>`` entries back into one mapping under ``key``
+    (``budgets.wiki: 5`` -> ``budgets: {wiki: 5}``).  ``rest`` splits at
+    its first ``depth - 1`` dots (depth 2: ``sinks.a.path`` ->
+    ``sinks: {a: {path: ...}}``); later dots stay in the innermost key,
+    since stratum or split names may hold dots.  A key given nested wins
+    and its dotted entries are dropped; other entries pass through."""
+    out = {k: v for k, v in obj.items() if not any(k.startswith(p + ".") for p in keys)}
+    for key in keys:
+        if key in obj:
+            continue
+        pref = key + "."
+        sub: dict = {}
+        for k, v in obj.items():
+            if k.startswith(pref):
+                *path, leaf = k[len(pref):].split(".", depth - 1)
+                node = sub
+                for part in path:
+                    node = node.setdefault(part, {})
+                node[leaf] = v
+        if sub:
+            out[key] = sub
+    return out
+
+
 class _Parser:
     def __init__(self, text: str):
         self.s = text

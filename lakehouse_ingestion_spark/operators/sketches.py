@@ -75,9 +75,18 @@ def merge_sketch_state(
 
 def estimate(sketches: DataFrame, sketch_col: str = "sketch") -> DataFrame:
     """Read-time finalization: replace the sketch column with its
-    distinct-count estimate."""
+    distinct-count estimate.
+
+    The sketch is passed through ``hll_union`` (with itself) first: a
+    DataSketches HLL keeps a HIP estimator that depends on the update
+    ORDER, so the raw estimate of the same distinct set differs with
+    partitioning and merge cut points (398/400/401 for one input).  A
+    union result carries no HIP state and reads the order-free
+    composite estimator, so every path to the same set estimates the
+    same value — the lossless-union contract holds for estimates too."""
     return sketches.withColumn(
-        "estimate", F.hll_sketch_estimate(sketch_col)
+        "estimate",
+        F.hll_sketch_estimate(F.hll_union(sketch_col, sketch_col)),
     ).drop(sketch_col)
 
 

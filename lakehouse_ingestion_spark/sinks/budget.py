@@ -84,26 +84,13 @@ from lakehouse_ingestion_spark.sinks.base import (
 )
 
 
-def _mapping_option(o: dict, key: str):
-    """Return o[key], reconstituting a mapping that config-file loading
-    flattened to dotted keys (``budgets: {wiki: 5}`` arrives as
-    ``budgets.wiki: 5`` — config.py runs hocon.flatten_keys over target
-    options so Kafka-style dotted scalars stay flat).  Returns None when
-    neither form is present."""
-    if key in o:
-        return o[key]
-    pref = key + "."
-    sub = {k[len(pref):]: v for k, v in o.items() if k.startswith(pref)}
-    return sub or None
-
-
 def _params(opts: WriteOptions):
-    o = dict(opts.options)
-    for key in ("p", "budgets"):
-        val = _mapping_option(o, key)
-        if val is not None:
-            o = {k: v for k, v in o.items() if not k.startswith(key + ".")}
-            o[key] = val
+    from lakehouse_ingestion_spark.hocon import unflatten_keys
+
+    # config loading flattens target options to dotted keys (Kafka-style
+    # dotted scalars stay flat), so a `budgets: {wiki: 5}` mapping
+    # arrives as `budgets.wiki: 5` and must be nested again
+    o = unflatten_keys(opts.options, ("p", "budgets"))
     if "p" in o:
         # mass-share admission ("keep the docs carrying p of the quality
         # mass seen so far") — no cost column, the score IS the mass;

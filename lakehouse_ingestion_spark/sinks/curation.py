@@ -54,15 +54,11 @@ from lakehouse_ingestion_spark.sinks.base import (
 
 
 def _fractions(opts: WriteOptions) -> dict[str, float]:
-    raw = opts.options.get("fractions")
+    from lakehouse_ingestion_spark.hocon import unflatten_keys
+
+    # dotted-key flattening (HOCON convention): fractions.train: 0.8
+    raw = unflatten_keys(opts.options, ("fractions",)).get("fractions")
     if not isinstance(raw, dict) or not raw:
-        # dotted-key flattening (HOCON convention): fractions.train: 0.8
-        raw = {
-            k.split(".", 1)[1]: v
-            for k, v in opts.options.items()
-            if k.startswith("fractions.")
-        }
-    if not raw:
         raise ConfigError(
             "sticky_split target needs options.fractions (name -> share)"
         )

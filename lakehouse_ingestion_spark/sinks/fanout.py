@@ -44,18 +44,13 @@ from lakehouse_ingestion_spark.sinks.base import (
 
 
 def _specs(opts: WriteOptions):
+    from lakehouse_ingestion_spark.hocon import unflatten_keys
     from lakehouse_ingestion_spark.streaming.multi_sink import SinkSpec
 
     ledger = opts.options.get("ledger_path")
-    raw = opts.options.get("sinks")
-    if not isinstance(raw, dict) or not raw:
-        # config normalization flattens nested option maps to dotted
-        # keys (the HOCON convention): rebuild sinks.<name>.<field>
-        raw = {}
-        for k, v in opts.options.items():
-            if k.startswith("sinks."):
-                _, name, field = k.split(".", 2)
-                raw.setdefault(name, {})[field] = v
+    # config normalization flattens nested option maps to dotted keys
+    # (the HOCON convention): rebuild sinks.<name>.<field>
+    raw = unflatten_keys(opts.options, ("sinks",), depth=2).get("sinks")
     if not ledger or not isinstance(raw, dict) or not raw:
         raise ConfigError(
             "fanout target needs options.ledger_path and a non-empty"

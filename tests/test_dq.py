@@ -217,9 +217,9 @@ def test_drift_check_config_factory():
     from lakehouse_ingestion_spark.pipeline import _CHECK_TYPES
 
     chk = _CHECK_TYPES["drift"](
-        {"column": "amount", "ref_mean": 120.5, "ref_std": 10,
-         "max_sigmas": 2, "ref_null_fraction": 0.1,
-         "max_null_fraction_delta": 0.05}
+        **{"column": "amount", "ref_mean": 120.5, "ref_std": 10,
+           "max_sigmas": 2, "ref_null_fraction": 0.1,
+           "max_null_fraction_delta": 0.05}
     )
     assert chk.name == "drift[amount]"
     assert chk.ref_mean == 120.5 and chk.ref_std == 10.0

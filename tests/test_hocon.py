@@ -12,7 +12,7 @@ import pytest
 
 from lakehouse_ingestion_spark.config import load_config, parse_config
 from lakehouse_ingestion_spark.errors import ConfigError
-from lakehouse_ingestion_spark.hocon import flatten_keys, parse_hocon
+from lakehouse_ingestion_spark.hocon import flatten_keys, parse_hocon, unflatten_keys
 
 
 def test_scalars_and_coercion():
@@ -235,3 +235,21 @@ def test_target_options_reflattened():
     }
     cfg = parse_config(raw)
     assert cfg.jobs[0].target.options["delta.appendOnly"] == "true"
+
+
+def test_unflatten_keys_inverts_flatten_for_mapping_options():
+    opts = {"path": "/out", "kafka.bootstrap.servers": "h:1",
+            "budgets": {"wiki": 5, "en.web": 3},
+            "sinks": {"a": {"path": "/a", "where": "x > 1"}}}
+    flat = flatten_keys(opts)
+    assert flat["budgets.en.web"] == 3
+    # only the named mapping keys are nested again; later dots stay in
+    # the innermost key, and Kafka-style dotted scalars stay flat
+    back = unflatten_keys(flat, ("budgets",))
+    assert back["budgets"] == {"wiki": 5, "en.web": 3}
+    assert back["kafka.bootstrap.servers"] == "h:1"
+    assert "sinks.a.path" in back
+    assert unflatten_keys(flat, ("sinks",), depth=2)["sinks"] == opts["sinks"]
+    # a mapping given nested wins over stray dotted entries
+    assert unflatten_keys({"p": {"en": 0.5}, "p.de": 0.1}, ("p",)) == {"p": {"en": 0.5}}
+    assert unflatten_keys({"k": 1}, ("p",)) == {"k": 1}
